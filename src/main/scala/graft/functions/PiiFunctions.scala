@@ -45,7 +45,7 @@ object PiiFunctions {
     * not hygiene: on the salted sf1 corpus every token matches the
     * email local-part class end-to-end before failing at '@', and Java's
     * backtracking turns that into ~11 s of the 16 s q104 sweep leg
-    * (DiagPii A/B; docs/SCALING.md r11) — '@'-free rows skip it all. */
+    * (r11 A/B; docs/SCALING.md r11) — '@'-free rows skip it all. */
   private val requiredLiteral: Map[String, String] = Map("email" -> "@")
 
   /** Per-class match count columns, aliased `n_<name>`. */

@@ -66,7 +66,7 @@ object TtnEnvelope {
     * The envelope decode is [[graft.plans.TtnEnvelopeParse]] — a native
     * single-pass byte-level parser ([[TtnFastJson]]) replacing
     * `from_json(envelopeSchema)` + coalesce/arrays_zip navigation: the
-    * DiagQ76 sf1 stage breakdown priced the Jackson stage at ~9.6 s over
+    * r9 q76 sf1 stage breakdown priced the Jackson stage at ~9.6 s over
     * 10 M envelopes EVEN with the parse schema pruned to one field
     * (generic tokenization dominates, not schema width); the native scan
     * extracts only the consumed subfields and runs inside whole-stage

@@ -13,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * likewise parses each telegram once and touches only the handful of
   * subfields the import consumes).
   *
-  * Why not `from_json`: the DiagQ76 stage breakdown priced the Jackson
+  * Why not `from_json`: the r9 q76 stage breakdown priced the Jackson
   * parse of 10 M envelopes at ~9.6 s even when Catalyst prunes the parse
   * schema to ONE field — the cost is generic tokenization plus Spark's
   * per-row parser/row-builder machinery, not schema width. This parser

@@ -54,15 +54,16 @@ object ChartDoc {
     // an aggregate + broadcast join — so event rows are never exchanged
     // or sorted and the heavy stage is not capped at the series
     // cardinality — ran FLAT at sf0.1 (2.46 vs 2.38 s min-of-3,
-    // DiagChart interleaved A/B, outputs asserted identical) and 2.7×
+    // interleaved A/B, outputs asserted identical) and 2.7×
     // SLOWER at sf1 (1.09 → 2.96 s against a ~1.05 tide): the form
     // needs TWO full scans (broadcast build + probe) and through sf1
     // the single scan + one exchange + sort below stays cheaper —
     // sorting n rows by (t, o) within 60 series partitions is simply
     // fast relative to a second parquet scan. The window form stays;
     // the rejected form (packed (t<<32|o) first-reading min, enforced
-    // packing guards) lives in DiagChart for re-measurement if a
-    // deploy's series count or row volume ever moves the crossover.
+    // packing guards) is in git history and plans/r14/ for
+    // re-measurement if a deploy's series count or row volume ever
+    // moves the crossover.
     val series = Window.partitionBy(col("st"), col("pol"))
     val rows = base
       .withColumn("rn", row_number().over(series.orderBy(col("t"), col("o"))))

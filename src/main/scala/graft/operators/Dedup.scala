@@ -91,6 +91,11 @@ object Dedup {
       .select(col("d1"), col("d2"), col("jac"))
   }
 
+  /** Margin of the q26 size cut: pairs_of_sorted_sizecut runs at
+    * `threshold - SizeCutEps` (see SortedPairsSizeCut; PropertySpec pins
+    * it off the 1e-4 grid). */
+  val SizeCutEps = 5.1e-5
+
   /** All document pairs with word n-gram Jaccard ≥ threshold, via a
     * shingle inverted-index self-join. With `maxShingleDf = Some(cap)`,
     * shingles present in more than `cap` documents are excluded from
@@ -107,8 +112,7 @@ object Dedup {
     * representative before near-dup detection. */
   def ngramJaccardPairs(df: DataFrame, id: Column, text: Column,
                         n: Int, threshold: Double,
-                        maxShingleDf: Option[Int] = None,
-                        sizeCut: Boolean = true): DataFrame = {
+                        maxShingleDf: Option[Int] = None): DataFrame = {
     val sh = shingleRows(df, id, text, n)
     maxShingleDf match {
       case None =>
@@ -139,21 +143,22 @@ object Dedup {
         // (xxhash64) the oracle twin is lost (a collision MERGES two
         // posting lists: the shared-shingle count inflates and a real
         // shingle can be pushed over the cap — exactness becomes
-        // "w.h.p."). Strings stay. r9 also measured (DfProbe stages,
-        // sf10) a df-count-then-Bloom-prefilter variant of this build —
-        // a net LOSS on this corpus shape (q26 sf10 91 s → 158 s): 99%
-        // of shingle hash groups here have df ≥ 2, so the prefilter
-        // dropped ~nothing and its extra tokenize+count pass (~44 s at
-        // sf10) was pure overhead. Kept out; the df-1-dominated web-
-        // corpus case it targets is served by the cap semantics anyway.
+        // "w.h.p."). Strings stay. r9 also measured (staged probe, see
+        // git history; sf10) a df-count-then-Bloom-prefilter variant of
+        // this build — a net LOSS on this corpus shape (q26 sf10 91 s →
+        // 158 s): 99% of shingle hash groups here have df ≥ 2, so the
+        // prefilter dropped ~nothing and its extra tokenize+count pass
+        // (~44 s at sf10) was pure overhead. Kept out; the
+        // df-1-dominated web-corpus case it targets is served by the
+        // cap semantics anyway.
         //
         // r8 scale fix. The r1-r7 shape piped DISTINCT candidate pairs
-        // into [[verifyJaccard]]; profiled at sf10 (DfProbe) that join
-        // was the superlinear stage — 133 M candidate pairs (for 75 k
-        // true pairs), each join row carrying TWO ~50-element shingle
-        // arrays (~3 KB/row ≈ 380 GB of join payload → spill), +173 s of
-        // the 273 s total, where sf1 paid +11 s. The fix computes the
-        // intersection WITHOUT arrays:
+        // into [[verifyJaccard]]; profiled at sf10 (staged probe, git
+        // history) that join was the superlinear stage — 133 M candidate
+        // pairs (for 75 k true pairs), each join row carrying TWO
+        // ~50-element shingle arrays (~3 KB/row ≈ 380 GB of join payload
+        // → spill), +173 s of the 273 s total, where sf1 paid +11 s. The
+        // fix computes the intersection WITHOUT arrays:
         //  - i_uc  = # shared shingles with df ∈ [2, cap]: the pair
         //    explode feeds a fixed-width (d1,d2) count aggregate — the
         //    same shuffle volume the old `.distinct()` already paid, now
@@ -234,10 +239,10 @@ object Dedup {
           .select(col("p"), explode(col("hs")).as("s"))
         // `lazyPlan` (SPARK_GRAFT_LAZY_DEDUP=1): skip the cache, the
         // broadcast-gate count and the eager localCheckpoint and return
-        // the pure declarative plan — for explain/plan-dump callers
-        // (Explain, PLANS.txt), which otherwise pay a full execution
-        // just to look at the plan (ADVICE r9). Production keeps the
-        // eager path: posting feeds two consumers.
+        // the pure declarative plan — for plan dumps (Explain), which
+        // otherwise pay a full execution just to look at the plan
+        // (ADVICE r9). Production keeps the eager path: posting feeds
+        // two consumers.
         val lazyPlan = sys.env.get("SPARK_GRAFT_LAZY_DEDUP").contains("1")
         val posting = shP.groupBy(col("s"))
           // sorted_longs_agg = array_sort(collect_list(...)) as ONE
@@ -268,12 +273,9 @@ object Dedup {
           // 5.1e-5 epsilon is the HALF_UP round-at-4-decimals boundary
           // plus a conservative double-representation guard (see
           // SortedPairsSizeCut). Measured at sf0.1: 1.27 M → 0.97 M
-          // generated pairs (−24%). `sizeCut = false` keeps the uncut
-          // generator for same-JVM A/B probes (DfProbe).
-          val pairGen =
-            if (sizeCut) call_function("pairs_of_sorted_sizecut", col("ids"),
-              lit(nshBits), lit(threshold - 5.1e-5))
-            else call_function("pairs_of_sorted", col("ids"))
+          // generated pairs (−24%).
+          val pairGen = call_function("pairs_of_sorted_sizecut", col("ids"),
+            lit(nshBits), lit(threshold - SizeCutEps))
           val iUc = uc.select(pairGen.as(Seq("p1", "p2")))
             .groupBy(col("p1"), col("p2"))
             .agg(count(lit(1)).as("i_uc"))
@@ -522,7 +524,7 @@ object Dedup {
         // (label(n) ← min(label(n), label(label(n))), the O(log d)
         // round bound) was prototyped here — on q72's real near-dup
         // graph the loop converges in 2 ROUNDS at sf0.001 AND sf0.01
-        // (DiagCc measurement, OPTIMIZATION_r13.md), so the jump's
+        // (r13 measurement, OPTIMIZATION_r13.md), so the jump's
         // extra node-table self-join per round bought nothing and cost
         // one more shuffle per round. Near-dup clusters are mutual
         // near-copies — diameter stays tiny by construction; the jump

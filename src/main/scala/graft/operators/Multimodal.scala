@@ -198,7 +198,7 @@ object Multimodal {
   /** Direct RIFF/WAVE walker for the 16-bit mono PCM layout (r12): the
     * JDK's `AudioSystem`/`WaveFileReader` header parse costs ~50 µs per
     * call AND is serialized JVM-globally (measured: 50 k headers 3.1 s
-    * on 1 thread, 4.1 s on 32 — negative scaling; DiagQ68c), which on a
+    * on 1 thread, 4.1 s on 32 — negative scaling; r12 probe), which on a
     * 32-core executor turns a trivial decode into the partition
     * bottleneck. The RIFF container is a public, trivial format (chunk
     * walk: "RIFF"+size+"WAVE", then "fmt "/"data" chunks), so the hot

@@ -202,8 +202,9 @@ object Similarity {
     // r14 measured-and-REJECTED (guide §1 discipline): repartitioning
     // the candidate stream by d1 before the distinct merges the dedup
     // exchange with the verify join's (2 exchanges → 1 in the plan) —
-    // but the ×10-probe interleaved A/B ran it SLOWER (full 3.18 s vs
-    // this shape 2.79 s min-of-3, lshstage full vs full_2ex legs): the
+    // but the ×10-probe interleaved A/B ran it SLOWER (`full` 2.79 s vs
+    // `full_1ex` 3.18 s min-of-3; the probe legs are in git history,
+    // the plans in plans/r14/): the
     // removed exchange carries only ~16 B × survivors (~3 MB at 200 k
     // candidates), the 1-exchange form gives up the Generate→partial-agg
     // codegen fusion, and hashing on d1 alone spreads worse than
@@ -377,7 +378,8 @@ object Similarity {
     // stand-in; a trained IVF collects the same K×d matrix per round).
     // r12: the previous `base.join(broadcast(cents))` n×K fan-out
     // materialized both vectors on every joined row before the argmin
-    // aggregate — 274.9 s at 220 k vectors × 860 cells (DiagSem). The
+    // aggregate — 274.9 s at 220 k vectors × 860 cells (r12 stage
+    // split, see git history). The
     // assignment is now ONE map-only projection: the codegen'd
     // `nearest_centroid` argmin loops the K×d matrix per row (same
     // (s, c_id) lexicographic minimum, bit-equal dots), zero shuffle.

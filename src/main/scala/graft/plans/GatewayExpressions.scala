@@ -38,7 +38,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Why native: `transform`'s lambda is evaluated interpreted per element
   * per row (HigherOrderFunction is CodegenFallback), and it was stacked
   * on two more interpreted transforms in the envelope hot path — the
-  * DiagQ76 stage breakdown priced the struct-nav stage at +5.7 s over
+  * r9 q76 stage breakdown priced the struct-nav stage at +5.7 s over
   * 10 M envelopes. This expression is one codegen'd loop.
   */
 case class BestGateway(child: Expression) extends UnaryExpression {

@@ -97,7 +97,7 @@ case class DotProduct(left: Expression, right: Expression)
   * `base.join(broadcast(cents))` fan-out: that shape materializes BOTH
   * 64-dim vectors on every one of the n×K joined rows before the argmin
   * aggregate — ~113 GB of row traffic at 220 k vectors × 860 cells,
-  * measured 274.9 s for the q113 semDedup probe leg (DiagSem r12). Here
+  * measured 274.9 s for the q113 semDedup probe leg (r12 stage split). Here
   * the argmin runs as a tight compiled loop inside one projection: n
   * rows, K·d multiply-adds each, zero shuffle, zero fan-out.
   *

@@ -3,7 +3,7 @@ package graft.functions
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Grubbs
+import graft.operators.{Dedup, Grubbs}
 
 /** ScalaCheck properties from the SURVEY §5 test plan: geohash
   * round-trip, haversine metric axioms, Taylor linearity, Grubbs
@@ -118,5 +118,46 @@ class PropertySpec extends AnyFunSuite {
         val v = (h * (2L * j + 1) + 97L * j + 13) % 2147483647L
         v >= 0 && v < 2147483647L
     })
+  }
+
+  test("q26 size cut keeps every pair whose rounded Jaccard can reach the threshold") {
+    // SortedPairsSizeCut's exactness argument, off the 1e-4 grid: the
+    // downstream test round(i / (n1 + n2 - i), 4) >= t is hardest to
+    // fail at i = min(n1, n2), where the Jaccard is min / max. Any pair
+    // that can reach t there must survive the cut at t - SizeCutEps.
+    val nshBits = 21 // Dedup's (id << 21 | n_sh) packing
+    val maxN = (1 << nshBits) - 1
+    // Spark's round(x, 4) on a double: HALF_UP on its decimal string
+    def round4(x: Double): Double =
+      BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+    def survives(n1: Int, n2: Int, t: Double): Boolean =
+      new graft.plans.SizeCutPairsIterator(
+        Array((1L << nshBits) | n1, (2L << nshBits) | n2), nshBits,
+        t - Dedup.SizeCutEps).hasNext
+    // sizes straddling the rounding boundary (lo within a few of
+    // (t - 5e-5)·hi, where round4 flips) or uniform
+    def genSizes(t: Double): Gen[(Int, Int)] = for {
+      hi <- Gen.chooseNum(1, maxN)
+      lo <- Gen.oneOf(Gen.chooseNum(1, hi), Gen.chooseNum(-3, 3).map { d =>
+        math.min(hi, math.max(1, math.ceil((t - 5e-5) * hi).toInt + d)) })
+      swap <- Gen.oneOf(false, true)
+    } yield if (swap) (hi, lo) else (lo, hi)
+    def reaches(n1: Int, n2: Int, t: Double): Boolean =
+      round4(math.min(n1, n2).toDouble / math.max(n1, n2)) >= t
+    // ...and the cut is not vacuous: a pair clearly below t is dropped
+    def prop(t: Double, n1: Int, n2: Int): Boolean = {
+      val ratio = math.min(n1, n2).toDouble / math.max(n1, n2)
+      (!reaches(n1, n2, t) || survives(n1, n2, t)) &&
+        (ratio >= t - 1e-4 || !survives(n1, n2, t))
+    }
+    // the off-grid ratios these thresholds round from: 1/3 and 6/7
+    assert(reaches(1, 3, 0.3333) && survives(1, 3, 0.3333))
+    assert(reaches(7, 6, 0.8571) && survives(7, 6, 0.8571))
+    for (t <- Seq(0.3333, 0.8571))
+      check(Prop.forAllNoShrink(genSizes(t)) { case (n1, n2) => prop(t, n1, n2) }, n = 2000)
+    val genT = Gen.oneOf(Gen.const(0.3333), Gen.const(0.8571), Gen.chooseNum(1e-4, 1.0))
+    check(Prop.forAllNoShrink(genT.flatMap(t => genSizes(t).map(t -> _))) {
+      case (t, (n1, n2)) => prop(t, n1, n2)
+    }, n = 2000)
   }
 }

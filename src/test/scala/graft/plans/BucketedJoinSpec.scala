@@ -56,4 +56,44 @@ class BucketedJoinSpec extends AnyFunSuite {
       spark.sql("DROP TABLE IF EXISTS bj_right")
     }
   }
+
+  test("join of two tables bucketed on the key plans without a shuffle") {
+    spark.sql("DROP TABLE IF EXISTS bj_a")
+    spark.sql("DROP TABLE IF EXISTS bj_b")
+    val warehouse = java.nio.file.Files.createTempDirectory("bucketed").toString
+    val a = (1 to 1000).map(i => (i % 50, i.toDouble)).toDF("k", "v")
+    val b = (1 to 500).map(i => (i % 50, s"m$i")).toDF("k", "m")
+    a.write.bucketBy(8, "k").sortBy("k").option("path", s"$warehouse/bj_a").saveAsTable("bj_a")
+    b.write.bucketBy(8, "k").sortBy("k").option("path", s"$warehouse/bj_b").saveAsTable("bj_b")
+    // AQE stays on here: the bucketed join plans no exchange of any kind
+    val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ path
+      val joined = spark.table("bj_a").join(spark.table("bj_b"), "k")
+      val plan = joined.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange"), s"bucketed join must not shuffle:\n$plan")
+      // and it still computes the right thing
+      val n = joined.count()
+      assert(n == (1 to 1000).map(_ % 50).groupBy(identity).map { case (k, as) =>
+        as.size * (1 to 500).count(_ % 50 == k)
+      }.sum)
+    } finally {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
+      spark.sql("DROP TABLE IF EXISTS bj_a")
+      spark.sql("DROP TABLE IF EXISTS bj_b")
+    }
+  }
+
+  test("aggregation on the bucket key also skips the exchange") {
+    spark.sql("DROP TABLE IF EXISTS bj_c")
+    val warehouse = java.nio.file.Files.createTempDirectory("bucketed").toString
+    val a = (1 to 1000).map(i => (i % 50, i.toDouble)).toDF("k", "v")
+    a.write.bucketBy(8, "k").option("path", s"$warehouse/bj_c").saveAsTable("bj_c")
+    try {
+      val plan = spark.table("bj_c").groupBy("k").agg(sum("v"))
+        .queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange"),
+        s"bucketed aggregation must not shuffle:\n$plan")
+    } finally spark.sql("DROP TABLE IF EXISTS bj_c")
+  }
 }
